@@ -5,22 +5,27 @@ partitioner uses murmur2 with seed 0x9747b28c (public Apache Kafka
 ``org.apache.kafka.common.utils.Utils.murmur2``; reference behavior at
 crates/kafka-backup-core/src/restore/repartition.rs:36-75). Bit-compatibility
 matters: a restored topic must route each key to the same partition the Java
-client would pick, so we reimplement it here and verify against the published
-Kafka test vectors (tests/test_murmur2.py).
+client would pick, so every surface is verified against the published Kafka
+vectors (tests/test_murmur2.py).
 
-Two surfaces:
-- ``murmur2(bytes)`` — pure-Python scalar (driver-side / oracle use)
-- ``murmur2_expr(col)`` / ``kafka_partition_expr(col, n)`` — an Arrow-batched
-  pandas UDF for executor-side vectorized use. Hashing is the only part of
-  the repartition path that leaves the JVM; the shuffle itself is Spark's.
+Three surfaces:
+- ``murmur2(bytes)`` — pure-Python scalar (driver-side / test reference)
+- ``murmur2_expr(col)`` / ``kafka_partition_expr(col, n)`` — a Catalyst
+  ``StaticInvoke`` of commons-codec's ``MurmurHash2.hash32``, compiled into
+  whole-stage codegen: no Python worker on the repartition path.  4M 32-byte
+  keys through ``sum(...)`` take 0.91 s on 4 vCPU against 0.87–1.02 s for a
+  hash-free ``octet_length`` baseline (the Arrow numpy kernel it replaced
+  took 4.13 s), so the hash cost is inside noise (SCALE.md).
+- ``murmur2_duckdb_sql(col)`` — the DuckDB oracle twin.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType
+from pyspark.sql.types import BinaryType, IntegerType
 
 KAFKA_SEED = 0x9747B28C
 _M = 0x5BD1E995
@@ -70,200 +75,58 @@ def kafka_partition(key: bytes | None, num_partitions: int) -> int | None:
     return to_positive(murmur2(key)) % num_partitions
 
 
-def murmur2_numpy(keys: list) -> "object":
-    """Vectorized murmur2 over a batch of byte keys → int64 numpy array
-    (None keys → the caller masks them; this function requires non-null).
-
-    The whole batch becomes a padded uint8 matrix (one vectorized scatter —
-    no per-row Python), then the hash runs as ~maxlen/4 full-batch uint32
-    passes; numpy's native uint32 wraparound IS the mod-2^32 arithmetic.
-    Measured on local[32] at 20M keys: 14.2M keys/s end-to-end vs 1.7M/s for
-    the per-element Python map and 0.5M/s for the interpreted JVM fold
-    (SCALE.md)."""
-    import numpy as np
-
-    n = len(keys)
-    lens = np.fromiter((len(k) for k in keys), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    flat = np.frombuffer(b"".join(keys), dtype=np.uint8, count=total)
-    maxlen = int(lens.max()) if n else 0
-    mat = np.zeros((n, max(maxlen, 4) + 4), dtype=np.uint8)  # slack: safe tail gathers
-    offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    row_idx = np.repeat(np.arange(n), lens)
-    col_idx = np.arange(total) - np.repeat(offsets, lens)
-    mat[row_idx, col_idx] = flat
-
-    M = np.uint32(_M)
-    h = (np.uint32(KAFKA_SEED) ^ lens.astype(np.uint32)).astype(np.uint32)
-    nwords = lens // 4
-    for w in range(int(nwords.max()) if n else 0):
-        active = nwords > w
-        c = 4 * w
-        k = (
-            mat[:, c].astype(np.uint32)
-            | (mat[:, c + 1].astype(np.uint32) << np.uint32(8))
-            | (mat[:, c + 2].astype(np.uint32) << np.uint32(16))
-            | (mat[:, c + 3].astype(np.uint32) << np.uint32(24))
-        )
-        k *= M
-        k ^= k >> np.uint32(_R)
-        k *= M
-        h = np.where(active, (h * M) ^ k, h)
-    rem = (lens & 3).astype(np.int64)
-    n4 = (nwords * 4).astype(np.int64)
-    rows = np.arange(n)
-    t = h.copy()
-    b2 = mat[rows, n4 + 2].astype(np.uint32) << np.uint32(16)
-    b1 = mat[rows, n4 + 1].astype(np.uint32) << np.uint32(8)
-    b0 = mat[rows, n4].astype(np.uint32)
-    t = np.where(rem == 3, t ^ b2, t)
-    t = np.where(rem >= 2, t ^ b1, t)
-    t = np.where(rem >= 1, (t ^ b0) * M, t).astype(np.uint32)
-    t ^= t >> np.uint32(13)
-    t *= M
-    t ^= t >> np.uint32(15)
-    return t.view(np.int32).astype(np.int64)
-
-
-@F.pandas_udf(LongType())
-def _murmur2_udf(keys: pd.Series) -> pd.Series:
-    if len(keys) == 0:
-        return pd.Series([], dtype="float64")
-    mask = keys.notna()
-    vals = [bytes(b) for b in keys[mask]]
-    out = pd.Series([None] * len(keys), dtype="object")
-    if vals:
-        out[mask] = list(murmur2_numpy(vals))
-    return out
-
-
-def murmur2_pandas_expr(col: Column | str) -> Column:
-    """Signed-32 murmur2 via Arrow-batched numpy kernel — the THROUGHPUT
-    path (14.2M keys/s on local[32] at 20M keys): use it when executors have
-    Python workers. ``murmur2_expr`` below is the pure-JVM expression — zero
-    Python dependency, bit-identical, but interpreted per-row (HOF folds
-    don't codegen; 0.5M keys/s measured) — it stays the default so the
-    repartition plan carries no Python nodes and works where Python workers
-    are forbidden; flip to impl="pandas" for the 100-TB hot path."""
-    return _murmur2_udf(F.col(col) if isinstance(col, str) else col)
-
-
-_M32 = 1 << 32
-
-
-def _let(value: Column, fn) -> Column:
-    """Bind ``value`` to a lambda variable so ``fn`` can reference it many
-    times while it is EVALUATED ONCE per row (Catalyst duplicates expression
-    trees textually; a higher-order-function lambda variable is a true
-    let-binding). One array wrap per binding — negligible next to the
-    string/conv work it deduplicates."""
-    return F.element_at(F.transform(F.array(value), fn), 1)
+_MURMUR2_CLASS = "org.apache.commons.codec.digest.MurmurHash2"
 
 
 def murmur2_expr(col: Column | str) -> Column:
-    """Signed-32 murmur2 of a binary column as a PURE-JVM expression.
+    """Signed-32 murmur2 of a key column as a Catalyst expression.
 
-    The byte loop is an ``aggregate`` fold over the hex encoding, decoded one
-    4-byte word per ``conv`` (byte-swapped to little-endian arithmetically);
-    tail + finalization live inside the fold's ``finish`` lambda and chain
-    through let-bindings (``_let``) so no subtree — in particular the fold
-    body — is ever re-evaluated. All arithmetic is BIGINT mod 2^32 (products
-    ≤ 2^32·0x5BD1E995 < 2^63, no overflow). No Python workers on the
-    repartition hot path. Verified bit-for-bit against the published Kafka
-    vectors in tests/test_murmur2.py.
-
-    (The first cut of this expression extracted every byte with its own
-    substring+conv and spliced the fold body into ``when`` chains that
-    duplicated it ~32× — thousands of string ops per row. Kept as a warning.)
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    hx = F.hex(c)  # 2 hex chars per byte, uppercase
-    length = F.length(c)
-    n_words = F.floor(length / 4).cast("long")  # full 4-byte words
-    rem = length % 4
-    n4 = n_words * 4
-
-    def byte_at(i: Column) -> Column:
-        # i is 0-based byte index; conv returns its decimal value as string
-        return F.conv(F.substring(hx, i * 2 + 1, F.lit(2)), 16, 10).cast("long")
-
-    def mul_m(x: Column) -> Column:
-        return (x * F.lit(_M)) % F.lit(_M32)
-
-    def xor(a: Column, b: Column) -> Column:
-        return a.bitwiseXOR(b)
-
-    def shr(x: Column, n: int) -> Column:
-        return F.floor(x / F.lit(1 << n)).cast("long")
-
-    # words[w]: little-endian 4-byte word, ONE conv each (big-endian decode,
-    # arithmetic byte swap), materialized once as an array before the fold
-    def le_word(w: Column) -> Column:  # w is 1-based
-        be = F.conv(F.substring(hx, (w - 1) * 8 + 1, F.lit(8)), 16, 10).cast("long")
-        return _let(
-            be,
-            lambda b: (
-                shr(b, 24)
-                + (shr(b, 16) % 256) * 256
-                + (shr(b, 8) % 256) * 65536
-                + (b % 256) * 16777216
-            ),
+    A ``StaticInvoke`` of ``MurmurHash2.hash32(byte[], int, int)`` with the
+    Kafka seed: Spark emits the call into its generated code, so the hash
+    never leaves the JVM.  commons-codec ships in Spark's jars, so every
+    executor has the class.  The key is cast to binary first; NULL keys give
+    NULL (``propagateNull``).  Built through the classic ``ExpressionUtils``
+    bridge, so it needs Spark Classic (like ``fsio``); a JVM without the
+    class or constructor raises ``RuntimeError``."""
+    c = (F.col(col) if isinstance(col, str) else col).cast(BinaryType())
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("murmur2_expr needs a running Spark Classic context")
+    jvm = sc._jvm
+    try:
+        utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+        to_seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq
+        seed = F.lit(KAFKA_SEED - (1 << 32))  # the seed as a signed Java int
+        invoke = jvm.org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
+            jvm.java.lang.Class.forName(_MURMUR2_CLASS),
+            jvm.org.apache.spark.sql.types.DataTypes.IntegerType,
+            "hash32",
+            to_seq([utils.expression(e._jc) for e in (c, F.octet_length(c), seed)]),
+            to_seq([]),  # inputTypes: none, the arguments are already typed
+            True,  # propagateNull
+            True,  # returnNullable
+            True,  # isDeterministic
+            jvm.scala.Option.empty(),  # scalarFunction
         )
-
-    words = F.transform(
-        F.when(n_words > 0, F.sequence(F.lit(1), n_words)).otherwise(
-            F.array().cast("array<bigint>")
-        ),
-        le_word,
-    )
-
-    h0 = xor(F.lit(KAFKA_SEED).cast("long"), length.cast("long"))
-
-    def step(h: Column, k0: Column) -> Column:
-        k1 = _let(mul_m(k0), lambda k: mul_m(xor(k, shr(k, _R))))
-        return _let(k1, lambda k: xor(mul_m(h), k))
-
-    def tail(h: Column) -> Column:
-        # xor-ing 0 is the identity, so the rem<3 / rem<2 branches collapse
-        # into zero literals — h is referenced once, no tree duplication
-        hi = F.when(rem == 3, byte_at(n4 + 2) * 65536).otherwise(F.lit(0)) + F.when(
-            rem >= 2, byte_at(n4 + 1) * 256
-        ).otherwise(F.lit(0))
-        t = xor(h, hi)
-        return _let(t, lambda x: F.when(rem >= 1, mul_m(xor(x, byte_at(n4)))).otherwise(x))
-
-    def fmix(t: Column) -> Column:
-        u1 = _let(t, lambda x: mul_m(xor(x, shr(x, 13))))
-        u2 = _let(u1, lambda x: xor(x, shr(x, 15)))
-        # unsigned 32 → signed 32 (Java parity)
-        return _let(u2, lambda x: F.when(x >= (1 << 31), x - _M32).otherwise(x))
-
-    out = F.aggregate(words, h0, step, lambda h: fmix(tail(h)))
-    return F.when(c.isNotNull(), out)
+        return Column(utils.column(invoke))
+    except (Py4JError, TypeError) as e:
+        # a missing class surfaces as Py4JJavaError (ClassNotFoundException)
+        # or TypeError ("'JavaPackage' object is not callable"), a changed
+        # constructor signature as Py4JError
+        raise RuntimeError(
+            f"murmur2_expr: cannot build a StaticInvoke of {_MURMUR2_CLASS}.hash32 "
+            f"on this JVM ({type(e).__name__}: {e})"
+        ) from e
 
 
-def kafka_partition_expr(
-    col: Column | str, num_partitions: int, impl: str = "jvm"
-) -> Column:
+def kafka_partition_expr(col: Column | str, num_partitions: int) -> Column:
     """Kafka default-partitioner target partition for a binary key column.
 
     Null keys yield null (callers overlay round-robin for those — see
-    operators/repartition.py).
-
-    ``impl``: "pandas" (Arrow-batched numpy kernel — the THROUGHPUT path,
-    ~28× the fold at volume per SCALE.md; needs the package importable on
-    executors) or "jvm" (pure built-in expression fold, zero Python
-    dependency — the portability fallback).  Callers should normally go
-    through operators/repartition.py's ``impl="auto"``, which probes the
-    executors once per session and picks the kernel when it actually runs,
-    falling back to the fold otherwise.  Both are bit-identical to the
-    Kafka vectors (tests/test_murmur2.py).
-    """
-    h = murmur2_pandas_expr(col) if impl == "pandas" else murmur2_expr(col)
-    return F.when(
-        h.isNotNull(),
-        F.pmod(h.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(num_partitions)).cast(IntegerType()),
-    )
+    operators/repartition.py).  Bit-identical to the Kafka vectors
+    (tests/test_murmur2.py)."""
+    h = murmur2_expr(col)
+    return F.pmod(h.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(num_partitions)).cast(IntegerType())
 
 
 def _duck_byte(hx: str, i: str) -> str:
@@ -276,8 +139,8 @@ def _duck_byte(hx: str, i: str) -> str:
 
 def murmur2_duckdb_sql(col: str) -> str:
     """DuckDB SQL expression computing the same signed-32 murmur2 over a BLOB
-    column — the oracle twin of ``murmur2_expr`` (same hex-fold shape;
-    validated against the Kafka vectors in tests/test_murmur2.py)."""
+    column — the oracle twin of ``murmur2_expr``, written as a fold over the
+    hex encoding (validated against the Kafka vectors in tests/test_murmur2.py)."""
     hx = f"upper(hex({col}))"
     length = f"octet_length({col})"
     nw = f"({length} // 4)"
@@ -303,8 +166,7 @@ def murmur2_duckdb_sql(col: str) -> str:
     # let-bind every stage via single-element list_transform (DuckDB's
     # lambda-binding idiom) so each stage evaluates ONCE per row.  Naive
     # textual substitution — each stage splicing its predecessor into both
-    # CASE branches — expands the whole word fold ~96× per row (the exact
-    # antipattern murmur2_expr's let-bound Spark fold avoids), and DuckDB
+    # CASE branches — expands the whole word fold ~96× per row, and DuckDB
     # does not CSE the copies: the oracle ran ~8× slower than this form.
     def let(val: str, template: str) -> str:
         # template refers to the bound value as `_v`

@@ -19,21 +19,21 @@ import json
 import time
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_backup_spark import manifest as mani
-
-MANIFEST_SCHEMA = (
-    "topic string, partition int, key string, start_offset long, end_offset long, "
-    "start_ts long, end_ts long, record_count long, uncompressed_size long, "
-    "compressed_size long"
-)
 
 SEGMENT_FIELDS = [
     "key", "start_offset", "end_offset", "start_ts", "end_ts",
     "record_count", "uncompressed_size", "compressed_size",
 ]
+
+# Arrow types map onto Spark's: string, int (partition), long (the rest)
+MANIFEST_SCHEMA = pa.schema(
+    [("topic", pa.string()), ("partition", pa.int32()), ("key", pa.string())]
+    + [(f, pa.int64()) for f in SEGMENT_FIELDS[1:]]
+)
 
 
 def manifest_to_doc(
@@ -45,8 +45,12 @@ def manifest_to_doc(
     segment_span: int | None = None,
 ) -> dict[str, Any]:
     """DataFrame → BackupManifest document (manifest.rs:6-28 field surface).
-    One driver collect of segment-granularity rows (see module docstring)."""
-    rows = manifest.orderBy("topic", "partition", "start_offset").collect()
+    One driver collect of segment-granularity rows (see module docstring),
+    sorted on the driver: a distributed ``orderBy`` would add a range-sample
+    job and an exchange for rows that all end up here anyway."""
+    rows = sorted(
+        manifest.collect(), key=lambda r: (r["topic"], r["partition"], r["start_offset"])
+    )
     topics: dict[str, dict[str, Any]] = {}
     for r in rows:
         t = topics.setdefault(
@@ -85,17 +89,15 @@ def manifest_to_doc(
 
 
 def doc_to_manifest(spark: SparkSession, doc: dict[str, Any]) -> DataFrame:
+    """BackupManifest document → manifest DataFrame.  Built from a typed
+    Arrow table, so the frame is a ``LocalTableScan``: no Python worker."""
     rows = [
-        (t["name"], p["partition"], *[s[f] for f in SEGMENT_FIELDS])
+        {"topic": t["name"], "partition": p["partition"], **s}
         for t in doc["topics"]
         for p in t["partitions"]
         for s in p["segments"]
     ]
-    cols = ["topic", "partition", *SEGMENT_FIELDS]
-    # reorder: SEGMENT_FIELDS starts with key which matches schema order
-    return spark.createDataFrame(
-        [tuple(r) for r in rows], MANIFEST_SCHEMA
-    ).select(*cols)
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA))
 
 
 class ManifestStore:
@@ -132,12 +134,14 @@ class ManifestStore:
         """S8 merge-on-write: load stored manifest, union-merge with
         ``current`` (stored wins on key/start_offset collisions —
         backup/engine.rs:1240-1301), write back atomically."""
-        spark = current.sparkSession
-        existing = self.load(spark)
-        merged = mani.merge_manifests(existing, current) if existing is not None else current
-        if segment_span is None:
-            prior = self.load_doc()
-            segment_span = prior.get("segment_span") if prior else None
+        prior = self.load_doc()
+        merged = (
+            mani.merge_manifests(doc_to_manifest(current.sparkSession, prior), current)
+            if prior is not None
+            else current
+        )
+        if segment_span is None and prior is not None:
+            segment_span = prior.get("segment_span")
         doc = manifest_to_doc(
             merged,
             self.backup_id,

@@ -79,7 +79,9 @@ def consumer_group_check(group_offsets: DataFrame) -> DataFrame:
 
 def validation_summary(*check_results: DataFrame) -> DataFrame:
     """A7: counts by status; overall = failed if any failed, else warning if
-    any warned, else passed (validation/mod.rs:121-192)."""
+    any warned, else passed (validation/mod.rs:121-192).  Integrity-scan
+    statuses count too: ``valid`` as passed, ``missing``/``corrupted`` as
+    failed."""
     statuses = None
     for df in check_results:
         s = df.select("status")
@@ -87,8 +89,10 @@ def validation_summary(*check_results: DataFrame) -> DataFrame:
     assert statuses is not None
     counts = statuses.groupBy().agg(
         F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("status") == "passed", 1).otherwise(0)).alias("passed"),
-        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
+        F.sum(F.when(F.col("status").isin("passed", "valid"), 1).otherwise(0)).alias("passed"),
+        F.sum(
+            F.when(F.col("status").isin("failed", "missing", "corrupted"), 1).otherwise(0)
+        ).alias("failed"),
         F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("errors"),
         F.sum(F.when(F.col("status") == "warning", 1).otherwise(0)).alias("warnings"),
     )

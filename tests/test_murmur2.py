@@ -16,6 +16,7 @@ from kafka_backup_spark.functions.murmur2 import (
     kafka_partition,
     kafka_partition_expr,
     murmur2,
+    murmur2_expr,
     to_positive,
 )
 
@@ -66,3 +67,34 @@ def test_partition_expr_matches_python(spark):
     }
     for k in keys:
         assert got[k] == kafka_partition(k, 6), f"mismatch for {k!r}"
+
+
+def test_kafka_vectors_through_exprs(spark):
+    """The executor-side expressions reproduce the published vectors too."""
+    df = spark.createDataFrame([(k,) for k in KAFKA_VECTORS], "key binary")
+    rows = df.select(
+        "key",
+        murmur2_expr("key").alias("h"),
+        kafka_partition_expr("key", 12).alias("p"),
+    ).collect()
+    assert len(rows) == len(KAFKA_VECTORS)
+    for r in rows:
+        expected = KAFKA_VECTORS[bytes(r["key"])]
+        assert r["h"] == expected
+        assert r["p"] == to_positive(expected) % 12
+
+
+def test_string_keys_are_hashed_as_utf8(spark):
+    df = spark.createDataFrame([("héllo😀",), (None,)], "key string")
+    got = [r["h"] for r in df.select(murmur2_expr(F.col("key")).alias("h")).collect()]
+    assert got == [murmur2("héllo😀".encode()), None]
+
+
+def test_missing_jvm_class_raises_clearly(spark, monkeypatch):
+    import importlib
+
+    # the package re-exports the murmur2() function under the module's name
+    m = importlib.import_module("kafka_backup_spark.functions.murmur2")
+    monkeypatch.setattr(m, "_MURMUR2_CLASS", "org.example.NoSuchMurmur")
+    with pytest.raises(RuntimeError, match="cannot build a StaticInvoke"):
+        m.murmur2_expr("key")

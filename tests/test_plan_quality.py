@@ -172,27 +172,77 @@ def test_load_table_survives_vanilla_session(spark, sf_dir):
 def test_repartition_plans_scale(spark, sf_dir):
     """R1/R2 must be pure projections + one hash shuffle, with no Exchange
     SinglePartition (the old row_number() window funneled every row through
-    one task).  The catalog murmur2 entry runs the Arrow-batched numpy
-    kernel (the recommended hot-path impl) — Arrow-batched, never
-    row-at-a-time Python; round-robin stays Python-free entirely."""
-    from kafka_backup_spark.operators.repartition import assign_target_partitions
-    from kafka_backup_spark.queries.common import records_df
-
+    one task).  Both strategies stay Python-free: the murmur2 hash is a
+    codegen'd StaticInvoke of commons-codec's MurmurHash2."""
     qs = catalog.queries()
     for name in ("murmur2_repartition", "round_robin_repartition"):
-        df = qs[name](spark, sf_dir)
-        plan = _plan(df)
-        assert "BatchEvalPython" not in plan, name  # no per-row Python ever
+        plan = _plan(qs[name](spark, sf_dir))
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
         assert "Exchange SinglePartition" not in plan, name
         assert "Window" not in plan, name
-    rr = _plan(qs["round_robin_repartition"](spark, sf_dir))
-    assert "ArrowEvalPython" not in rr
-    # the portability default (impl="jvm") stays a pure-expression fold:
-    # zero Python nodes of any kind in the plan
-    jvm = _plan(
-        assign_target_partitions(records_df(spark, sf_dir), 5, impl="jvm")
-    )
-    assert "ArrowEvalPython" not in jvm and "BatchEvalPython" not in jvm
+
+
+def test_product_path_starts_no_python_worker(spark, sf_dir, tmp_path):
+    """backup → manifest load → integrity scan → murmur2 restore runs no
+    Python node in any executed plan (status store, incl. the backup's own
+    writes), and the murmur2 call sits inside whole-stage codegen.  The one
+    RDD scan allowed is the backup manifest's ``localCheckpoint`` (a JVM
+    RDD); a frame built from Python rows scans a PythonRDD instead."""
+    import re
+    import uuid
+
+    from kafka_backup_spark import manifest as mani
+    from kafka_backup_spark.engine import BackupConfig, BackupEngine, RestoreConfig, RestoreEngine
+    from kafka_backup_spark.manifest_store import ManifestStore
+    from kafka_backup_spark.validation.checks import integrity_scan
+
+    tag = f"purity#{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    records = events_as_records(load_table(spark, sf_dir, "events"))
+    store = SegmentStore(str(tmp_path / "store"))
+    sc.setJobDescription(tag)
+    try:
+        manifest = BackupEngine(store, BackupConfig()).run(records)
+        ManifestStore(store.root, "b1").save(manifest, segment_span=1000)
+        stored = ManifestStore(store.root, "b1").load(spark)
+        observed = mani.build_manifest(store.read(spark), 1000).select(
+            "key", "record_count", "start_offset", "end_offset"
+        )
+        statuses = {r["status"] for r in integrity_scan(stored, observed).collect()}
+        sink = str(tmp_path / "sink")
+        RestoreEngine(store, RestoreConfig(repartition_to=12)).plan(spark).write.parquet(sink)
+    finally:
+        sc.setJobDescription(None)
+    assert statuses == {"valid"}
+    assert spark.read.parquet(sink).count() == records.count()
+
+    status_store = spark._jsparkSession.sharedState().statusStore()
+    plans = []
+    it = status_store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.description() == tag:
+            plans.append(e.physicalPlanDescription())
+    assert len(plans) >= 4
+    hashed = []
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+        # formatted plan: the tree, then one detail block per node, all
+        # separated by blank lines; AQE trees list the executed (final)
+        # plan before the initial one
+        tree, *blocks = [b.strip() for b in plan.split("== Physical Plan ==")[-1].split("\n\n")]
+        executed = set(re.findall(r"\((\d+)\)", tree.split("== Initial Plan ==")[0]))
+        for b in blocks:
+            node = re.match(r"\((\d+)\) ", b)
+            if node is None or node.group(1) not in executed:
+                continue
+            head = b.splitlines()[0]
+            if "Scan ExistingRDD" in head:
+                assert "at localCheckpoint" in b, b
+            if "MurmurHash2.hash32" in b:
+                hashed.append(head)
+    # the executed node computing the hash runs inside whole-stage codegen
+    assert hashed and all("[codegen id" in h for h in hashed), hashed
 
 
 def test_dedup_exact_scans_cold_parquet_not_the_pin(spark, sf_dir):

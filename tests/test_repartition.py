@@ -48,55 +48,6 @@ def test_dispersed_is_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_auto_impl_uses_kernel_when_probe_succeeds(spark):
-    """impl="auto" (the default) must resolve to the Arrow-batched numpy
-    kernel on executors where the package imports (this environment), and
-    the probe must run at most once per session."""
-    from kafka_backup_spark.operators import repartition as rp
-
-    rp._KERNEL_PROBE.clear()
-    df = spark.range(0, 10).select(
-        F.lit(0).alias("partition"),
-        F.col("id").alias("offset"),
-        F.col("id").cast("string").cast("binary").alias("key"),
-    )
-    out = assign_target_partitions(df, 4)  # impl defaults to "auto"
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # kernel path chosen
-    app = spark.sparkContext.applicationId
-    assert rp._KERNEL_PROBE == {app: True}
-    # second call: no new probe entry, same resolution
-    out2 = assign_target_partitions(df, 4)
-    assert "ArrowEvalPython" in out2._jdf.queryExecution().executedPlan().toString()
-    assert rp._KERNEL_PROBE == {app: True}
-
-
-def test_auto_impl_falls_back_to_jvm_on_probe_failure(spark):
-    """Portability: when the executor probe fails (package/numpy missing on
-    executors), impl="auto" must fall back to the pure-JVM fold — zero
-    Python nodes in the plan — and produce identical partitions."""
-    from kafka_backup_spark.operators import repartition as rp
-
-    app = spark.sparkContext.applicationId
-    rp._KERNEL_PROBE.clear()
-    rp._KERNEL_PROBE[app] = False  # simulate a failed probe
-    try:
-        df = spark.range(0, 50).select(
-            F.lit(0).alias("partition"),
-            F.col("id").alias("offset"),
-            F.col("id").cast("string").cast("binary").alias("key"),
-        )
-        out = assign_target_partitions(df, 4)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        jvm_rows = {r["offset"]: r["target_partition"] for r in out.collect()}
-    finally:
-        rp._KERNEL_PROBE.clear()
-    forced = assign_target_partitions(df, 4, impl="pandas")
-    pandas_rows = {r["offset"]: r["target_partition"] for r in forced.collect()}
-    assert jvm_rows == pandas_rows  # bit-identical impls
-
-
 def test_murmur2_null_keys_fall_back_to_round_robin(spark):
     df = spark.range(0, 100).select(
         F.lit(0).alias("partition"),

@@ -104,3 +104,34 @@ def test_integrity_scan_flags_null_observations_as_corrupted(spark):
     )
     status = {r["key"]: r["status"] for r in integrity_scan(manifest, observed).collect()}
     assert status == {"k1": "corrupted", "k2": "valid"}
+
+
+def test_summary_counts_integrity_scan_statuses(spark):
+    """An integrity scan reports valid/missing/corrupted, not passed/failed:
+    19 valid segments and 1 missing one must summarise as passed=19,
+    failed=1, overall='failed' (cmd_validate and cmd_evidence take this
+    path), and a corrupted segment fails the summary the same way."""
+    rows = [(f"k{i}", "t", 0, 10, 10 * i, 10 * i + 9) for i in range(20)]
+    manifest = spark.createDataFrame(
+        rows,
+        "key string, topic string, partition int, record_count long, "
+        "start_offset long, end_offset long",
+    )
+    observed = spark.createDataFrame(
+        [(k, n, s, e) for k, _, _, n, s, e in rows[:19]],
+        "key string, record_count long, start_offset long, end_offset long",
+    )
+    s = validation_summary(integrity_scan(manifest, observed)).collect()[0]
+    assert (s["total"], s["passed"], s["failed"], s["overall"]) == (20, 19, 1, "failed")
+
+    corrupt = observed.unionByName(
+        spark.createDataFrame([("k19", 9, 190, 199)], observed.schema)
+    )
+    s = validation_summary(integrity_scan(manifest, corrupt)).collect()[0]
+    assert (s["passed"], s["failed"], s["overall"]) == (19, 1, "failed")
+
+    clean = observed.unionByName(
+        spark.createDataFrame([("k19", 10, 190, 199)], observed.schema)
+    )
+    s = validation_summary(integrity_scan(manifest, clean)).collect()[0]
+    assert (s["passed"], s["failed"], s["overall"]) == (20, 0, "passed")
