@@ -28,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries import textops as T
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
@@ -50,8 +51,7 @@ def main() -> int:
     v_ship = T.q_embedding_near_dup(spark, sf_dir)
     v_ship.write.format("noop").mode("overwrite").save()  # builds the index
 
-    app = spark.sparkContext.applicationId
-    entry = T._ANN_INDEX[(app, f"near_dup:{sf_dir}")]
+    entry = artifacts.peek(spark, "ann", f"near_dup:{sf_dir}")
     corpus, member = entry["corpus"], entry["member"]
 
     a, b = member.alias("a"), member.alias("b")

@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries import textops as T
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
@@ -63,8 +64,7 @@ def noop(df) -> None:
 
 def build_v_cell(spark, sf_dir):
     """Per-cell variant over the SAME warm shared index as the shipped body."""
-    app = spark.sparkContext.applicationId
-    entry = T._ANN_INDEX[(app, f"near_dup:{sf_dir}")]
+    entry = artifacts.peek(spark, "ann", f"near_dup:{sf_dir}")
     corpus = entry["corpus"]
     member = T._ann_index_frame(spark, f"near_dup:{sf_dir}", "member", None)
     mm = member.join(corpus, "vec_id").select("cell", "vec_id", "qe")
@@ -77,8 +77,7 @@ def build_v_cell(spark, sf_dir):
 
 def build_v_pair(spark, sf_dir):
     """The r15-mid pair-join shape over the same warm shared index."""
-    app = spark.sparkContext.applicationId
-    entry = T._ANN_INDEX[(app, f"near_dup:{sf_dir}")]
+    entry = artifacts.peek(spark, "ann", f"near_dup:{sf_dir}")
     corpus = entry["corpus"]
     member = T._ann_index_frame(spark, f"near_dup:{sf_dir}", "member", None)
     a, b = member.alias("a"), member.alias("b")

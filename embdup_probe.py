@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries import textops as T
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
@@ -42,8 +43,7 @@ def main() -> int:
     full = T.q_embedding_near_dup(spark, sf_dir)
     full.write.format("noop").mode("overwrite").save()
 
-    app = spark.sparkContext.applicationId
-    entry = T._ANN_INDEX[(app, f"near_dup:{sf_dir}")]
+    entry = artifacts.peek(spark, "ann", f"near_dup:{sf_dir}")
     corpus, member = entry["corpus"], entry["member"]
 
     a, b = member.alias("a"), member.alias("b")

@@ -13,8 +13,8 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from kafka_backup_spark import catalog  # noqa: E402
-from kafka_backup_spark.queries import layout, pipeline  # noqa: E402
+from kafka_backup_spark import artifacts, catalog  # noqa: E402
+from kafka_backup_spark.queries import layout  # noqa: E402
 from kafka_backup_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sf10")
@@ -39,8 +39,7 @@ def set_layout(spark, on: bool) -> None:
         spark.conf.set("spark.kafkaBackupSpark.bucketedLayout", OUT)
     else:
         spark.conf.unset("spark.kafkaBackupSpark.bucketedLayout")
-    catalog.release_plan_cache(spark)
-    pipeline._LAYOUTS.clear()
+    artifacts.release(spark)
 
 
 def main():

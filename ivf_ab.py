@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries import textops as T
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
@@ -57,8 +58,7 @@ def noop(df) -> None:
 
 def _cand(spark, sf_dir):
     """The shipped candidate frame over the warm shared index."""
-    app = spark.sparkContext.applicationId
-    idx = T._ANN_INDEX[(app, f"ivf:{sf_dir}")]
+    idx = artifacts.peek(spark, "ann", f"ivf:{sf_dir}")
     corpus, cells, cent_mat = idx["corpus"], idx["cells"], idx["cent_mat"]
     probes = corpus.filter(F.col("vec_id") < T.IVF_PROBES)
     pcells = probes.select(

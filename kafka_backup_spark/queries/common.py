@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark import manifest as mani
 from kafka_backup_spark.schema import events_as_records, load_table
 
@@ -169,21 +170,10 @@ def records_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded by segment/partition counts, not data volume (a 100 TB backup's
 # manifest is ~millions of rows of metadata — MEMORY_AND_DISK persists it
 # on one executor-cluster comfortably, and every validation/describe/reset
-# query starts from it instead of the raw stream).
-#
-# Staleness contract (same as textops._shared_gram_arrays): keyed on
-# (applicationId, sf_dir, kind) with NO file-modification check — parquet
-# under sf_dir is immutable for the session.  In-place writers must call
-# release_meta_cache(spark).
-_META_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-# ~8 metadata kinds + the records pin + up to 10 hot-table pins per sf_dir
-# (~19 entries) → room for ~6 concurrently-hot sf_dirs before oldest entries
-# unpersist.  The cap guards pathological many-directory sessions; entries
-# are bounded by the hot-table gate (≤256 MB each), and an evicted pin is a
-# perf regression (serial re-scan), never a correctness problem.
-_META_CACHE_CAP = 128
-
-
+# query starts from it instead of the raw stream).  The frames are the
+# registry's "meta" kind (kafka_backup_spark.artifacts), keyed (sf_dir,
+# kind); together with the hot-table pins below they hold ~19 entries per
+# sf_dir, so the kind's cap leaves room for ~6 concurrently-hot sf_dirs.
 def _shared_meta(
     spark: SparkSession, sf_dir: str, kind: str, build, parts: int | None = 1
 ) -> DataFrame:
@@ -193,24 +183,12 @@ def _shared_meta(
     layout makes every downstream stage schedule 32 near-empty tasks.  Pass
     ``parts=None`` for data-proportional frames (the offset mapping) to keep
     the build's natural partitioning."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _META_CACHE if k[0] != app]:
-        _META_CACHE.pop(k, None)  # drop handles left by dead sessions
-    key = (app, sf_dir, kind)
-    if key not in _META_CACHE:
-        # bounded registry: a long-lived session touching many sf_dirs must
-        # not pin storage monotonically — evict oldest-inserted first
-        while len(_META_CACHE) >= _META_CACHE_CAP:
-            old = _META_CACHE.pop(next(iter(_META_CACHE)))
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+
+    def persisted() -> DataFrame:
         df = build()
-        if parts is not None:
-            df = df.coalesce(parts)
-        _META_CACHE[key] = df.persist()
-    return _META_CACHE[key]
+        return (df if parts is None else df.coalesce(parts)).persist()
+
+    return artifacts.get(spark, "meta", (sf_dir, kind), persisted)
 
 
 _HOT_TABLE_MAX_BYTES = int(
@@ -248,8 +226,7 @@ def hot_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     256 MB) stream straight from parquet — at that size the scan itself
     yields enough splits for parallelism and pinning a fact table would be
     wrong at 100 TB.  Unsizable paths (object stores) stream too.
-    Staleness contract is _META_CACHE's: sf_dir is immutable for the
-    session; in-place writers call release_meta_cache(spark)."""
+    Staleness contract: kafka_backup_spark.artifacts."""
     path = f"{sf_dir}/{name}.parquet"
     try:
         nbytes = _dataset_bytes(path)
@@ -279,24 +256,6 @@ def cold_table(spark: SparkSession, sf_dir: str, name: str, *columns: str) -> Da
     tests pin the no-pin path for wide reads."""
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     return df.select(*columns) if columns else df
-
-
-def release_meta_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist every metadata frame this module pinned (one session's, or
-    all).  Dead-session handles are dropped without the unpersist call."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for k in list(_META_CACHE):
-        if app is None or k[0] == app:
-            df = _META_CACHE.pop(k)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing left to free
-    # drop cached plans built on the released frames (see textops'
-    # release_gram_cache): a stale plan would silently skip the rebuild
-    from kafka_backup_spark import catalog
-
-    catalog.release_plan_cache(spark)
 
 
 def build_manifest_df(spark: SparkSession, sf_dir: str, span: int = SEGMENT_SPAN) -> DataFrame:

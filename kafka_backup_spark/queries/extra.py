@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark import manifest as mani
 from kafka_backup_spark.offset_reset import generate_group_plan, import_group_snapshot, plan_summary
 from kafka_backup_spark.operators import projections
@@ -617,33 +618,30 @@ WHERE prev_offset IS NOT NULL AND "offset" > prev_offset + 1
 # compaction are session-scoped fixtures like header_roundtrip's segment
 # materialization; min-of-N reports the warm query cost by design.
 
-_SEG_BUCKETED: dict[tuple[str, str], str] = {}
-
 
 def _source_fingerprint(sf_dir: str) -> str:
     """Cheap content key for the record stream under ``sf_dir``: md5 over
     the sorted (relpath, size, mtime_ns) of events.parquet's files.  A
     dataset regenerated in place gets a NEW fingerprint, so the temp
     segment store below is never mistaken for current (ADVICE r14 #1).
-    Remote / unwalkable paths fall back to the path hash — those datasets
-    are immutable fixtures in this harness."""
+    Remote paths (neither a local file nor a directory) fall back to the
+    path hash — those datasets are immutable fixtures in this harness.  A
+    failed local stat (a file deleted mid-walk) raises: a partial digest
+    could name a store built from other data."""
     import hashlib
     import os
 
     src = os.path.join(sf_dir, "events.parquet")
     h = hashlib.md5(sf_dir.encode())
-    try:
-        if os.path.isfile(src):
-            st = os.stat(src)
-            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-        elif os.path.isdir(src):
-            for root, _dirs, files in sorted(os.walk(src)):
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    rel = os.path.relpath(os.path.join(root, f), src)
-                    h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
-    except OSError:
-        pass
+    if os.path.isfile(src):
+        st = os.stat(src)
+        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    elif os.path.isdir(src):
+        for root, _dirs, files in sorted(os.walk(src)):
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), src)
+                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:12]
 
 
@@ -655,7 +653,8 @@ def _segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
     fingerprint (not just the path), and a write is only trusted when its
     completion marker exists — a regenerated dataset or a crashed prior
     write triggers a clean rebuild instead of silently compacting stale or
-    torn data (ADVICE r14 #1)."""
+    torn data (ADVICE r14 #1).  Cached as registry kind "seg_bucketed",
+    so the first call after artifacts.release re-fingerprints the source."""
     import hashlib
     import os
     import shutil
@@ -664,11 +663,6 @@ def _segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
     from kafka_backup_spark.sources.segments import SegmentStore
 
     app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key in _SEG_BUCKETED:
-        return _SEG_BUCKETED[key]
-    for k in [k for k in _SEG_BUCKETED if k[0] != app]:
-        _SEG_BUCKETED.pop(k, None)
     fp = _source_fingerprint(sf_dir)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     table = f"segments_q{tag}_{fp[:6]}_b"
@@ -682,12 +676,15 @@ def _segments_bucketed(spark: SparkSession, sf_dir: str) -> str:
         with open(marker, "w") as f:
             f.write(fp)
     store.compact_bucketed(spark, table=table)
-    _SEG_BUCKETED[key] = table
     return table
 
 
 def q_segment_rollup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = spark.table(_segments_bucketed(spark, sf_dir))
+    t = spark.table(
+        artifacts.get(
+            spark, "seg_bucketed", sf_dir, lambda: _segments_bucketed(spark, sf_dir)
+        )
+    )
     return t.groupBy("topic", "partition").agg(
         F.count(F.lit(1)).alias("n_records"),
         F.min("offset").alias("start_offset"),

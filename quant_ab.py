@@ -10,7 +10,7 @@ Every consumer promotes before arithmetic (float64 in the Arrow scorers,
 int64 in the Lloyd sums), so values must be bit-identical — asserted via
 sorted-row hashes before timing.  Interleaved A/B blocks in ONE session:
 each block monkeypatches textops._quantize, releases the shared ANN
-index (release_gram_cache), rebuilds + warms untimed, then times reps
+index (artifacts.release), rebuilds + warms untimed, then times reps
 through the noop sink with per-rep job descriptions (guide §1.4/1.5)."""
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries import textops as T
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
@@ -91,7 +92,7 @@ def main() -> int:
     for blk in range(blocks):
         for vname, fn in (("i32", quant_i32), ("i64", quant_i64)):
             T._quantize = fn
-            T.release_gram_cache(spark)
+            artifacts.release(spark)
             dfs = {q: build(spark, sf_dir) for q, build in QUERIES.items()}
             for q, df in dfs.items():  # warm: index build + first plan, untimed
                 sc.setJobDescription(f"quant_ab:warm:{vname}:{q}#b{blk}")

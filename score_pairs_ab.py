@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_backup_spark import artifacts
 from kafka_backup_spark.queries import textops as T
 from kafka_backup_spark.session import autosize_shuffle_partitions, get_spark
 
@@ -52,10 +53,9 @@ def main() -> int:
     # Warm both shared indexes through the shipped bodies.
     noop(T.q_embedding_near_dup(spark, sf_dir))
     noop(T.q_ivf_topk(spark, sf_dir))
-    app = sc.applicationId
 
     # ── embedding_near_dup variants over the SAME warm index ──
-    nd = T._ANN_INDEX[(app, f"near_dup:{sf_dir}")]
+    nd = artifacts.peek(spark, "ann", f"near_dup:{sf_dir}")
     corpus = nd["corpus"]
     member = T._ann_index_frame(spark, f"near_dup:{sf_dir}", "member", None)
     a, b = member.alias("a"), member.alias("b")
@@ -85,7 +85,7 @@ def main() -> int:
     )
 
     # ── ivf_topk variants over the SAME warm index ──
-    ivf = T._ANN_INDEX[(app, f"ivf:{sf_dir}")]
+    ivf = artifacts.peek(spark, "ann", f"ivf:{sf_dir}")
     icorpus, cells, cent_mat = ivf["corpus"], ivf["cells"], ivf["cent_mat"]
     probes = icorpus.filter(F.col("vec_id") < T.IVF_PROBES)
     pcells = probes.select(

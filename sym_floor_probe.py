@@ -78,7 +78,7 @@ def q18_fragments(spark):
 
     _view(
         spark, SF_DIR, "lineitem", "orders", "customer",
-        bucketed=_gated_orderkey(SF_DIR, "lineitem", "orders"),
+        bucketed=_gated_orderkey(spark, SF_DIR, "lineitem", "orders"),
     )
     li = spark.table("lineitem").select(
         "l_orderkey",
@@ -99,11 +99,11 @@ def main():
     assert ent is not None, f"no layout at {OUT}"
     if layout.FP_KEY not in ent["tables"]:
         ent = layout.materialize_fingerprints(spark, SF_DIR, OUT)
-        from kafka_backup_spark import catalog
+        from kafka_backup_spark import artifacts
 
         # a sidecar added after registration hides behind the layout memo
-        # until the plan cache is released (same move bench.py makes)
-        catalog.release_plan_cache(spark)
+        # until the session's artifacts are released (same move bench.py makes)
+        artifacts.release(spark)
         ent = layout.register_bucketed(spark, OUT)
     fp_spec = ent["tables"][layout.FP_KEY]
 

@@ -4,10 +4,12 @@ hashing paths contain no Python UDFs."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_backup_spark import catalog
+from kafka_backup_spark import artifacts, catalog
 from kafka_backup_spark.schema import events_as_records, load_table
 from kafka_backup_spark.sources.segments import SegmentStore
 
@@ -89,17 +91,15 @@ def test_tpch_streamed_scans_prune_lineitem_columns(spark, monkeypatch):
     lineitem scan's ReadSchema must exclude the wide columns the query
     doesn't touch — a scan reading all 11 lineitem columns for a 4-column
     query would multiply 100-TB scan bytes by ~3×."""
-    from kafka_backup_spark.queries import common, pipeline
+    from kafka_backup_spark.queries import common
 
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 1)
-    # fresh views: the memo may hold pinned-path views from other tests
-    for k in [k for k in pipeline._VIEWS]:
-        pipeline._VIEWS.pop(k, None)
+    # fresh views: the registry may hold pinned-path views from other tests
+    artifacts.release(spark)
     try:
         tpch = [n for n in catalog.ALL_QUERIES if n.startswith("tpch_")]
         assert len(tpch) >= 12
         qs = catalog.queries()
-        catalog.release_plan_cache(spark)
         for name in tpch:
             plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
             li_scans = [
@@ -116,9 +116,7 @@ def test_tpch_streamed_scans_prune_lineitem_columns(spark, monkeypatch):
                 if name in ("tpch_q1_pricing", "tpch_q6_forecast"):
                     assert "l_partkey" not in line, name
     finally:
-        for k in [k for k in pipeline._VIEWS]:
-            pipeline._VIEWS.pop(k, None)
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
 
 
 def test_hashing_paths_have_no_python_udfs(spark):
@@ -453,42 +451,45 @@ def test_shared_meta_cache_single_entry_and_release(spark, sf_dir):
     from kafka_backup_spark import manifest as mani
     from kafka_backup_spark.queries import common
 
-    common.release_meta_cache()
+    artifacts.release(spark)
     m1 = common.manifest_df(spark, sf_dir)
     m2 = common.manifest_df(spark, sf_dir)
     assert m1 is m2  # one shared frame, not one per call
-    app = spark.sparkContext.applicationId
-    # the records/table pins (hot_table, records_df) share this registry;
+    # the records/table pins (hot_table, records_df) share this kind;
     # the manifest must still be a single entry
-    keys = [k for k in common._META_CACHE if k[0] == app and k[2].startswith("manifest")]
-    assert keys == [(app, sf_dir, "manifest:1000")]
+    keys = [k for k in artifacts.keys(spark, "meta") if k[1].startswith("manifest")]
+    assert keys == [(sf_dir, "manifest:1000")]
     assert m1.rdd.getNumPartitions() == 1  # metadata = one partition
     fresh = mani.build_manifest(common.records_df(spark, sf_dir), 1000)
     assert sorted(map(tuple, m1.collect())) == sorted(map(tuple, fresh.collect()))
-    common.release_meta_cache(spark)
-    assert not [k for k in common._META_CACHE if k[0] == app]
+    artifacts.release(spark)
+    assert not artifacts.keys(spark, "meta")
     assert not m1.is_cached
 
 
 def test_meta_cache_bounded_eviction(spark, sf_dir):
-    """Registry cap: inserting past _META_CACHE_CAP evicts (and unpersists)
-    the oldest entry instead of pinning storage forever."""
+    """Registry cap: inserting past the "meta" kind's cap evicts (and
+    unpersists) the oldest entry instead of pinning storage forever, and
+    leaves other kinds alone."""
     from kafka_backup_spark.queries import common
 
-    common.release_meta_cache()
+    artifacts.release(spark)
+    cap = artifacts.CAPS["meta"]
+    catalog.queries()["tpch_q6_forecast"](spark, sf_dir)  # plan + view entries
     frames = {}
-    for i in range(common._META_CACHE_CAP + 3):
+    for i in range(cap + 3):
         kind = f"__evict_test_{i}"
         frames[kind] = common._shared_meta(
             spark, sf_dir, kind, lambda i=i: spark.range(i + 1)
         )
-    app = spark.sparkContext.applicationId
-    live = [k for k in common._META_CACHE if k[0] == app]
-    assert len(live) <= common._META_CACHE_CAP
-    assert (app, sf_dir, "__evict_test_0") not in common._META_CACHE  # oldest out
+    live = artifacts.keys(spark, "meta")
+    assert len(live) == cap
+    assert (sf_dir, "__evict_test_0") not in live  # oldest out
     assert not frames["__evict_test_0"].is_cached  # and unpersisted
-    assert frames[f"__evict_test_{common._META_CACHE_CAP + 2}"].is_cached
-    common.release_meta_cache(spark)
+    assert frames[f"__evict_test_{cap + 2}"].is_cached
+    assert ("tpch_q6_forecast", sf_dir) in artifacts.keys(spark, "plan")
+    assert artifacts.peek(spark, "view", "lineitem") == sf_dir
+    artifacts.release(spark)
 
 
 def test_hot_table_size_gate_streams_large_tables(spark, sf_dir, monkeypatch):
@@ -498,24 +499,23 @@ def test_hot_table_size_gate_streams_large_tables(spark, sf_dir, monkeypatch):
     that size."""
     from kafka_backup_spark.queries import common
 
-    common.release_meta_cache(spark)
-    app = spark.sparkContext.applicationId
+    artifacts.release(spark)
 
     pinned = common.hot_table(spark, sf_dir, "documents")
-    assert (app, sf_dir, "table:documents") in common._META_CACHE
+    assert (sf_dir, "table:documents") in artifacts.keys(spark, "meta")
     assert "InMemoryRelation" in pinned._jdf.queryExecution().optimizedPlan().toString()
 
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 1)  # everything is big now
     streamed = common.hot_table(spark, sf_dir, "documents")
-    assert (app, sf_dir, "table:documents") not in common._META_CACHE
+    assert (sf_dir, "table:documents") not in artifacts.keys(spark, "meta")
     plan = streamed._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in plan and "Relation" in plan
     # records_df honors the same gate: over-gate events stream uncached
     r = common.records_df(spark, sf_dir)
-    assert (app, sf_dir, "records") not in common._META_CACHE
+    assert (sf_dir, "records") not in artifacts.keys(spark, "meta")
     assert "InMemoryRelation" not in r._jdf.queryExecution().optimizedPlan().toString()
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
 
 
 def test_pin_partitions_scale_with_table_size(spark, sf_dir):
@@ -535,10 +535,10 @@ def test_pin_partitions_scale_with_table_size(spark, sf_dir):
     want = -(-(11 << 20) // per_part)  # lineitem @ sf0.1, ceil division
     assert common.spread_parts(spark, 11 << 20) == min(dp, max(8, want))
     assert common.spread_parts(spark, 1 << 30) == dp       # capped
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
     docs = common.hot_table(spark, sf_dir, "documents")
     assert docs.rdd.getNumPartitions() == floor
-    common.release_meta_cache(spark)
+    artifacts.release(spark)
 
 
 def test_plan_cache_serves_same_dataframe_and_releases(spark, sf_dir):
@@ -551,9 +551,9 @@ def test_plan_cache_serves_same_dataframe_and_releases(spark, sf_dir):
     assert a is b
     other = q1(spark, "/root/testdata/sf0.01")
     assert other is not a  # keyed by sf_dir
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
     assert q1(spark, sf_dir) is not a
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
 
 
 def test_hot_table_size_gate_measures_directory_datasets(spark, tmp_path, monkeypatch):
@@ -568,8 +568,7 @@ def test_hot_table_size_gate_measures_directory_datasets(spark, tmp_path, monkey
     assert common._dataset_bytes(out) > 4096  # not the inode size
     monkeypatch.setattr(common, "_HOT_TABLE_MAX_BYTES", 4096)
     streamed = common.hot_table(spark, str(tmp_path), "big")
-    app = spark.sparkContext.applicationId
-    assert (app, str(tmp_path), "table:big") not in common._META_CACHE
+    assert (str(tmp_path), "table:big") not in artifacts.keys(spark, "meta")
     plan = streamed._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in plan
 
@@ -578,15 +577,123 @@ def test_release_plan_cache_drops_tpch_view_memo(spark, sf_dir):
     """A temp view holds its own analyzed plan (file listing included), so
     the release path must drop the TPC-H view memo together with the plan
     cache — otherwise post-release queries would resolve stale views."""
-    from kafka_backup_spark.queries import pipeline
-
     catalog.queries()["tpch_q6_forecast"](spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    assert any(k[0] == app for k in pipeline._VIEWS)
+    assert artifacts.keys(spark, "view")
     catalog.release_plan_cache(spark)
-    assert not [k for k in pipeline._VIEWS if k[0] == app]
+    assert not artifacts.keys(spark, "view")
     # and the query still works after release (views re-register)
     assert catalog.queries()["tpch_q6_forecast"](spark, sf_dir).count() >= 0
+
+
+def _is_cached(df) -> bool:
+    level = df.storageLevel  # asks the JVM cache manager, not the Python flag
+    return level.useMemory or level.useDisk
+
+
+def test_release_after_in_place_rewrite_rebuilds_every_artifact(spark, tmp_path):
+    """The one release path refreshes EVERY artifact built on a rewritten
+    dataset.  Before the registry, releasing the plan cache left the LSH
+    gram/band tables (and the meta release left them too), so
+    lsh_candidates and near_dup_pipeline kept answering from the old
+    documents while text_metrics moved on."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree("/root/testdata/sf0.001", sf)
+    names = ("lsh_candidates", "near_dup_pipeline", "text_metrics")
+    qs = catalog.queries()
+
+    def rows(sf_dir):
+        return {n: sorted(map(tuple, qs[n](spark, sf_dir).collect())) for n in names}
+
+    before = rows(sf)
+    docs = pq.read_table(f"{sf}/documents.parquet")
+    keep = [i % 2 == 0 for i in docs.column("doc_id").to_pylist()]
+    os.remove(f"{sf}/documents.parquet")
+    pq.write_table(docs.filter(keep), f"{sf}/documents.parquet")
+    catalog.release_plan_cache(spark)
+    after = rows(sf)
+
+    fresh_dir = str(tmp_path / "fresh")
+    shutil.copytree(sf, fresh_dir)  # a path no artifact was ever built on
+    fresh = rows(fresh_dir)
+    for n in names:
+        assert fresh[n] != before[n], n  # the rewrite changes every answer
+        assert after[n] == fresh[n], n
+    artifacts.release(spark)
+
+
+def test_release_frees_every_artifact_kind(spark, sf_dir, tmp_path):
+    """artifacts.release empties every kind for the session, unpersists
+    the DataFrames the entries held, and drops the registered temp views."""
+    from kafka_backup_spark.queries import pipeline
+
+    artifacts.release(spark)
+    qs = catalog.queries()
+    for name in (
+        "tpch_q6_forecast",  # plan, meta (pin), view, gate, money
+        "lsh_candidates",  # gram
+        "dup_clusters",  # tagged
+        "embedding_near_dup",  # ann
+        "segment_rollup_bucketed",  # seg_bucketed
+    ):
+        qs[name](spark, sf_dir).count()
+    spark.conf.set("spark.kafkaBackupSpark.bucketedLayout", str(tmp_path))
+    try:
+        assert pipeline._bucketed_layout(spark) is None  # layout (empty root)
+    finally:
+        spark.conf.unset("spark.kafkaBackupSpark.bucketedLayout")
+    kinds = ("plan", "meta", "view", "layout", "gate", "money",
+             "gram", "tagged", "ann", "seg_bucketed")
+    for kind in kinds:
+        assert artifacts.keys(spark, kind), kind
+    frames = [
+        artifacts.peek(spark, kind, key)
+        for kind in ("meta", "gram", "tagged")
+        for key in artifacts.keys(spark, kind)
+    ]
+    frames += [
+        v
+        for key in artifacts.keys(spark, "ann")
+        for v in artifacts.peek(spark, "ann", key).values()
+        if hasattr(v, "storageLevel")
+    ]
+    assert frames and all(_is_cached(df) for df in frames)
+    assert spark.catalog.tableExists("lineitem")
+
+    artifacts.release(spark)
+    for kind in kinds:
+        assert not artifacts.keys(spark, kind), kind
+    assert not any(_is_cached(df) for df in frames)
+    assert not spark.catalog.tableExists("lineitem")
+
+
+def test_catalog_modules_hold_no_memo_of_their_own():
+    """Session artifacts live in kafka_backup_spark.artifacts only: the
+    catalog and query modules define no module-level empty dict (a memo in
+    the making) and no release function besides the release_plan_cache
+    alias, so one release path keeps covering every cache."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).parent
+    found = []
+    for path in [pkg / "catalog.py", *sorted((pkg / "queries").glob("*.py"))]:
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if node.name.startswith("release"):
+                    found.append(f"{path.name}:{node.lineno} def {node.name}")
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                v = node.value
+                if (isinstance(v, ast.Dict) and not v.keys) or (
+                    isinstance(v, ast.Call)
+                    and isinstance(v.func, ast.Name)
+                    and v.func.id in ("dict", "defaultdict", "OrderedDict")
+                ):
+                    found.append(f"{path.name}:{node.lineno} module-level dict")
+    assert not found, found
 
 
 def test_compact_small_is_identity_beyond_the_gate(spark, sf_dir, monkeypatch):
@@ -728,7 +835,7 @@ def test_money_modes_agree(spark):
     results = {}
     for mode in ("single", "hilo"):
         spark.conf.set("spark.kafkaBackupSpark.moneyMode", mode)
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
         try:
             for n in names:
                 fn = catalog.queries()[n]
@@ -736,7 +843,7 @@ def test_money_modes_agree(spark):
                 results.setdefault(n, {})[mode] = rows
         finally:
             spark.conf.unset("spark.kafkaBackupSpark.moneyMode")
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
     for n in names:
         assert results[n]["single"] == results[n]["hilo"], n
 
@@ -877,7 +984,7 @@ def test_money_gate_reads_footers(spark):
     assert _money_single(spark, "/nonexistent") is False
 
 
-def test_money_gate_per_expression_kinds(spark, monkeypatch):
+def test_money_gate_per_expression_kinds(spark):
     """Per-expression money gating (VERDICT r13 #5): each aggregate shape
     carries its OWN footer-derived per-row bound — at a row count between
     the rev and charge thresholds, q1's revenue sums run single while its
@@ -899,7 +1006,7 @@ def test_money_gate_per_expression_kinds(spark, monkeypatch):
     # craft a boundary dataset: rows chosen so rows*rev < 2^59 ≤ rows*charge
     rows = int(float(2**59) / b["charge"]) + 1
     crafted = dict(bounds, rows=rows)
-    monkeypatch.setitem(pipeline._MONEY_BOUNDS, "/fake/boundary", crafted)
+    artifacts.put(spark, "money", "/fake/boundary", crafted)
     assert pipeline._money_single(spark, "/fake/boundary", "rev") is True
     assert pipeline._money_single(spark, "/fake/boundary", "charge") is False
     assert pipeline._money_single(spark, "/fake/boundary", "worst") is False
@@ -909,12 +1016,12 @@ def test_money_gate_per_expression_kinds(spark, monkeypatch):
     fn = catalog.queries()["tpch_q1_pricing"]
     auto = sorted(map(tuple, fn(spark, sf).collect()))
     spark.conf.set("spark.kafkaBackupSpark.moneyMode", "hilo")
-    catalog.release_plan_cache(spark)
+    artifacts.release(spark)
     try:
         hilo = sorted(map(tuple, fn(spark, sf).collect()))
     finally:
         spark.conf.unset("spark.kafkaBackupSpark.moneyMode")
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
     assert auto == hilo
 
 
@@ -977,7 +1084,7 @@ def test_embedding_near_dup_single_pair_cosine_eval(spark):
         assert live == 1, plan
         assert _live_node_count(plan, "FlatMapGroupsInArrow") == 1, plan
     finally:
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
 
 
 def test_media_stats_single_python_boundary(spark):
@@ -995,7 +1102,7 @@ def test_media_stats_single_python_boundary(spark):
             plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
             assert _live_node_count(plan, "MapInPandas") == 1, (name, plan)
     finally:
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
 
 
 def test_ivf_topk_single_python_boundary(spark):
@@ -1015,4 +1122,4 @@ def test_ivf_topk_single_python_boundary(spark):
         assert _live_node_count(plan, "BatchEvalPython") == 0, plan
         assert _live_node_count(plan, "MapInPandas") == 0, plan
     finally:
-        catalog.release_plan_cache(spark)
+        artifacts.release(spark)
